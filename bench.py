@@ -34,7 +34,7 @@ REPO = Path(__file__).resolve().parent
 sys.path.insert(0, str(REPO))
 
 import __spark_entry__ as entry_mod  # noqa: E402
-from real_time_mobility_heatmap_spark.session import get_spark  # noqa: E402
+from real_time_mobility_heatmap_spark.session import get_spark, spark_cpus  # noqa: E402
 
 LINE_BUDGET = 1850  # stdout line cap: recorder tail window is ~2000 chars
 DETAIL_PATH = REPO / "BENCH_DETAIL.json"
@@ -178,7 +178,7 @@ def main() -> None:
         # fingerprint-identical to the 32-core pin — its quiet read then
         # overwrote the ratchet and every 32-core comparison against it
         # flagged phantom regressions (r17 verdict #2).
-        "cpus": int(os.getenv("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))),
+        "cpus": spark_cpus(),
         "jvm": spark.sparkContext._jvm.System.getProperty("java.version"),
     }
     # drift attribution: was the baseline round recorded on the same

@@ -18,6 +18,7 @@ Normalization parity with mbta_to_kafka.py:60-74:
 from __future__ import annotations
 
 import json
+import os
 import time
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
@@ -87,16 +88,15 @@ class JsonFileSink:
     def flush(self) -> None:
         if not self._buffer:
             return
-        import os
-
         os.makedirs(self.directory, exist_ok=True)
-        path = f"{self.directory}/batch-{self._n:06d}.json"
-        with open(path + ".tmp", "w") as f:
+        name = f"batch-{self._n:06d}.json"
+        # the temp name is hidden ('.'-prefixed): Spark's file source lists
+        # the spool while we write and skips only '.'/'_' names
+        tmp = os.path.join(self.directory, f".{name}.tmp")
+        with open(tmp, "w") as f:
             for v in self._buffer:
                 f.write(json.dumps(v) + "\n")
-        import os as _os
-
-        _os.rename(path + ".tmp", path)  # files appear atomically to the stream
+        os.rename(tmp, os.path.join(self.directory, name))  # files appear atomically to the stream
         self._buffer.clear()
         self._n += 1
 

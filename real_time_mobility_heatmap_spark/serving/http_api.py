@@ -34,12 +34,8 @@ this at the streaming trigger cadence; requests never touch Spark.
 
 from __future__ import annotations
 
-import json
-import shutil
-import tempfile
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -233,34 +229,21 @@ def position_point_features(pings: DataFrame) -> DataFrame:
     )
 
 
-def _feature_collection_json(df: DataFrame, order_by, cap: int = FEATURE_CAP) -> str:
-    """Serialize a Feature DataFrame to one FeatureCollection JSON string.
+def _feature_collection_json(df: DataFrame, order_by, cap: int = FEATURE_CAP) -> bytes:
+    """Serialize a Feature DataFrame to one UTF-8 FeatureCollection payload.
 
     Scale posture: the selection is a deterministic top-``cap`` under
     ``order_by`` (Spark plans TakeOrderedAndProject — per-partition
-    partial top-N, never a full global sort), per-row JSON is rendered
-    executor-side with ``to_json``, and the rows are spooled through a
-    text file rather than ``collect()``-ed, so the driver never holds
-    more than the capped payload it is about to serve. An uncapped
+    partial top-N, never a full global sort) and per-row JSON is rendered
+    executor-side with ``to_json``, so the ``collect()`` brings the driver
+    only the capped payload it is about to serve. An uncapped
     ``collect()`` here was round 2's one serving-path scale flag."""
     capped = df.orderBy(*order_by).limit(cap)
     rows = capped.select(
         F.to_json(F.struct(*df.columns), {"ignoreNullFields": "false"}).alias("j")
-    )
-    spool = tempfile.mkdtemp(prefix="feature-spool-")
-    try:
-        rows.coalesce(1).write.mode("overwrite").text(spool)
-        features: list[str] = []
-        for part in sorted(Path(spool).glob("part-*")):
-            with open(part, encoding="utf-8") as f:
-                features.extend(ln for ln in (l.rstrip("\n") for l in f) if ln)
-        return (
-            '{"type":"FeatureCollection","features":['
-            + ",".join(features)
-            + "]}"
-        )
-    finally:
-        shutil.rmtree(spool, ignore_errors=True)
+    ).collect()
+    features = ",".join(r["j"] for r in rows)
+    return ('{"type":"FeatureCollection","features":[' + features + "]}").encode("utf-8")
 
 
 class TileApiServer:
@@ -274,9 +257,10 @@ class TileApiServer:
         refresh_ms: int = REFRESH_MS,
     ):
         self._feature_cap = feature_cap
-        empty = '{"type":"FeatureCollection","features":[]}'
+        # payloads are stored pre-encoded: a GET writes bytes, never re-encodes
+        empty = b'{"type":"FeatureCollection","features":[]}'
         self._payloads = {
-            "/": (map_page(refresh_ms), "text/html; charset=utf-8"),
+            "/": (map_page(refresh_ms).encode("utf-8"), "text/html; charset=utf-8"),
             "/api/tiles/latest": (empty, "application/geo+json"),
             "/api/tiles/range": (empty, "application/geo+json"),
             "/api/positions/latest": (empty, "application/geo+json"),
@@ -293,8 +277,7 @@ class TileApiServer:
                 if entry is None:
                     self.send_error(404)
                     return
-                body, content_type = entry
-                data = body.encode("utf-8")
+                data, content_type = entry
                 self.send_response(200)
                 self.send_header("Content-Type", content_type)
                 self.send_header("Content-Length", str(len(data)))

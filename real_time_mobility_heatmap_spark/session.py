@@ -14,9 +14,20 @@ import os
 from pyspark.sql import SparkSession
 
 
+def spark_cpus() -> int:
+    """The effective Spark core count: ``$SPARK_GRAFT_CPUS`` if set, else
+    the host's CPU count. A malformed value fails naming the variable."""
+    raw = os.getenv("SPARK_GRAFT_CPUS", "").strip()
+    if not raw:
+        return os.cpu_count() or 4
+    if not (raw.isdecimal() and int(raw) >= 1):
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return int(raw)
+
+
 def get_spark(app_name: str = "mobility-heatmap-engine", cpus: int | None = None) -> SparkSession:
     if cpus is None:
-        cpus = int(os.getenv("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
+        cpus = spark_cpus()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)

@@ -1,5 +1,9 @@
 from __future__ import annotations
 
+import os
+
+import pytest
+
 from real_time_mobility_heatmap_spark.producers.mobility_producer import (
     CollectingSink,
     JsonFileSink,
@@ -77,3 +81,31 @@ def test_producer_to_streaming_engine_end_to_end(spark, tmp_path):
     assert len(tiles) == 1
     assert tiles[0]["ping_count"] == 2
     assert tiles[0]["avg_speed_kmh"] == 54.0      # (36 + 72) / 2
+
+
+def test_spool_leftover_temp_file_is_never_read(spark, tmp_path, monkeypatch):
+    """A crash between the spool write and its rename leaves a temp file;
+    its name is hidden, so the stream drains without error and without
+    its rows."""
+    from real_time_mobility_heatmap_spark.streaming.assembly import start_tiles_query
+    from real_time_mobility_heatmap_spark.streaming.sinks import tile_store
+    from real_time_mobility_heatmap_spark.streaming.sources import json_ping_stream
+
+    spool = str(tmp_path / "topic")
+    sink = JsonFileSink(spool)
+    run_producer(FakeTransport([[RAW_OK]]), sink, "mbta", max_polls=1, sleep=lambda s: None)
+
+    def crash(src, dst):
+        raise OSError("crashed before rename")
+
+    with monkeypatch.context() as m:
+        m.setattr(os, "rename", crash)
+        sink.send("BUS_8", normalize_record(dict(RAW_OK, label="BUS_8"), "mbta"))
+        with pytest.raises(OSError):
+            sink.flush()
+    assert sorted(os.listdir(spool)) == [".batch-000001.json.tmp", "batch-000000.json"]
+
+    store = tile_store(str(tmp_path / "store"))
+    q = start_tiles_query(json_ping_stream(spark, spool), store, str(tmp_path / "ckpt"))
+    q.awaitTermination()
+    assert [r["ping_count"] for r in store.read(spark).collect()] == [1]

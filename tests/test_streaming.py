@@ -421,6 +421,127 @@ def test_vacuum_removes_only_orphan_data_dirs(spark, tmp_path):
     assert store.vacuum() == []  # idempotent
 
 
+def test_positions_query_evaluates_each_micro_batch_once(spark, dirs):
+    """The merge persists the bucket-tagged batch, so the touched-bucket
+    collect and the write share one evaluation: the source reports each
+    pinged row once, not once per action."""
+    valid = ROWS[:4]
+    _write_json(dirs["in"], "b1.json", valid)
+    q = start_positions_query(
+        json_ping_stream(spark, dirs["in"]), positions_store(dirs["store"]), dirs["ckpt"]
+    )
+    q.awaitTermination()
+    assert sum(p["numInputRows"] for p in q.recentProgress) == len(valid)
+
+
+def test_merge_writes_files_sized_by_data_not_per_bucket(spark, tmp_path):
+    """A merge touching every bucket lands in ONE data dir with at most one
+    file per shuffle partition (the old layout wrote one per bucket)."""
+    from real_time_mobility_heatmap_spark.streaming.sinks import KeyedParquetStore
+
+    store = KeyedParquetStore(str(tmp_path / "s"), key_cols=["k"], n_buckets=32)
+    store.merge(spark.createDataFrame([(f"k{i}", i) for i in range(1000)], "k string, v int"))
+    buckets = store._load_manifest()["buckets"]
+    assert len(buckets) == 32 and len(set(buckets.values())) == 1
+    (data_dir,) = store._bucket_dirs()
+    files = [f for f in os.listdir(data_dir) if f.endswith(".parquet")]
+    assert 1 <= len(files) <= int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert store.read(spark).count() == 1000
+
+
+def test_merge_plan_has_one_exchange_above_the_union(spark, tmp_path):
+    """repartition(__bucket) already clusters every key, so the per-key
+    window plans no second exchange."""
+    from real_time_mobility_heatmap_spark.streaming.sinks import KeyedParquetStore
+
+    store = KeyedParquetStore(str(tmp_path / "s"), key_cols=["k"], n_buckets=8)
+    store.merge(spark.createDataFrame([(f"k{i}", i) for i in range(40)], "k string, v int"))
+    incoming = spark.createDataFrame([("k3", 99), ("new", 1)], "k string, v int").withColumn(
+        "__bucket", store._bucket_col()
+    )
+    merged = store._merged(incoming, store._load_manifest(), store._buckets_of(incoming))
+    plan = merged._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Exchange") == 1, plan
+    assert plan.index("Exchange") < plan.index("Union"), plan
+
+
+def test_old_layout_manifest_fails_naming_the_store(spark, tmp_path):
+    """A manifest from the per-bucket-dir layout is refused with an error
+    that names the store, on read and on merge alike."""
+    import re
+
+    from real_time_mobility_heatmap_spark.streaming.sinks import KeyedParquetStore
+
+    store = KeyedParquetStore(str(tmp_path / "s"), key_cols=["k"], n_buckets=4)
+    os.makedirs(store.path)
+    with open(os.path.join(store.path, "MANIFEST.json"), "w") as f:
+        json.dump({"version": 1, "buckets": {"0": "data-abc/__bucket=0"}}, f)
+    with pytest.raises(ValueError, match=re.escape(store.path)):
+        store.read(spark)
+    with pytest.raises(ValueError, match="old per-bucket-dir layout"):
+        store.merge(spark.createDataFrame([("a", 1)], "k string, v int"))
+
+
+def _rows_on_disk(spark, store) -> list:
+    """Every row in every data dir, live or dead, read straight from disk."""
+    dirs = [os.path.join(store.path, d) for d in os.listdir(store.path) if d.startswith("data-")]
+    return spark.read.parquet(*dirs).collect()
+
+
+def test_delete_removes_the_rows_from_disk(spark, tmp_path):
+    """delete() folds every dir holding a touched bucket into its new dir,
+    so with retain_versions=1 the deleted row is gone from every file;
+    a dir holding no touched bucket keeps its files."""
+    from real_time_mobility_heatmap_spark.streaming.sinks import KeyedParquetStore
+
+    store = KeyedParquetStore(str(tmp_path / "s"), key_cols=["k"], n_buckets=32)
+    store.merge(spark.createDataFrame([(f"k{i}", i) for i in range(200)], "k string, v int"))
+    bucket_of = {
+        r["k"]: r["b"]
+        for r in store.read(spark).select("k", store._bucket_col().alias("b")).collect()
+    }
+    other = next(k for k in bucket_of if bucket_of[k] != bucket_of["k7"])
+    store.merge(spark.createDataFrame([(other, -1)], "k string, v int"))
+    kept_dir = store._load_manifest()["buckets"][str(bucket_of[other])]
+    kept_files = _bucket_files(store)[str(bucket_of[other])]
+
+    assert store.delete(spark.createDataFrame([("k7",)], "k string")) == 1
+    on_disk = _rows_on_disk(spark, store)
+    assert "k7" not in {r["k"] for r in on_disk}
+    assert len(on_disk) == 199  # no dead copy of any row is left either
+    assert store._load_manifest()["buckets"][str(bucket_of[other])] == kept_dir
+    assert _bucket_files(store)[str(bucket_of[other])] == kept_files
+    assert len({r["k"] for r in store.read(spark).collect()}) == 199
+
+
+def test_partial_merges_keep_dead_rows_below_live_rows(spark, tmp_path):
+    """Merges that each touch one bucket leave its old rows dead in the
+    shared dir until that dir's live share would drop below half; then
+    its remaining buckets are folded into the new dir and the old dir
+    leaves the disk."""
+    from real_time_mobility_heatmap_spark.streaming.sinks import KeyedParquetStore
+
+    store = KeyedParquetStore(str(tmp_path / "s"), key_cols=["k"], n_buckets=8)
+    store.merge(spark.createDataFrame([(f"k{i}", i) for i in range(80)], "k string, v int"))
+    (first,) = set(store._load_manifest()["buckets"].values())
+    one_per_bucket = {}
+    for r in store.read(spark).select("k", store._bucket_col().alias("b")).collect():
+        one_per_bucket.setdefault(r["b"], r["k"])
+    for n, b in enumerate(sorted(one_per_bucket)[:5], start=1):
+        store.merge(spark.createDataFrame([(one_per_bucket[b], -b)], "k string, v int"))
+        manifest = store._load_manifest()
+        for rel, written in manifest["dirs"].items():
+            live = sum(1 for d in manifest["buckets"].values() if d == rel)
+            assert 2 * live >= written, (n, rel, live, written)
+        assert (first in manifest["buckets"].values()) == (n < 5)
+        assert len(_rows_on_disk(spark, store)) < 2 * 80
+    assert os.path.isdir(os.path.join(store.path, first)) is False
+    assert len(_rows_on_disk(spark, store)) == 80
+    got = {r["k"]: r["v"] for r in store.read(spark).collect()}
+    assert len(got) == 80
+    assert all(got[one_per_bucket[b]] == -b for b in sorted(one_per_bucket)[:5])
+
+
 def test_stream_static_broadcast_enrichment(spark, dirs):
     """Stream-static join: each micro-batch is enriched from a broadcast
     static dim with NO streaming state; unmatched keys keep null dims."""
